@@ -1,4 +1,4 @@
-"""Layer catalog: Parquet-backed tile storage + metadata/attribute tables.
+"""Layer catalog: Parquet tile storage + a per-key JSON attribute store.
 
 Replaces the reference's HDFS AttributeStore + Avro layer
 readers/writers + SFC index (api/package.scala:62-385):
@@ -8,30 +8,50 @@ readers/writers + SFC index (api/package.scala:62-385):
   within files by a Z-order (Morton) key over (tile_col, tile_row) so
   Parquet row-group min/max stats prune spatial ranges — the exact
   role of the reference's ZCurveKeyIndexMethod (api/package.scala:143).
-- ``{base}/layers/`` — one metadata row per (layer, zoom)
-  (TileLayerMetadata analog, inferred from the data at write time like
-  TileLayerMetadata.fromRDD, GeotiffTilingExample.scala:50).
-- ``{base}/attributes/`` — JSON attribute store rows
-  (Utils.writeHistogram / readHistogram analog, Utils.scala:78-89).
+  Reads use the pinned ``model.TILE_SCHEMA`` (no footer inference).
+- ``{base}/_attributes/<layer>/<zoom>/metadata.json`` — the metadata
+  row of one (layer, zoom) (TileLayerMetadata analog, inferred from the
+  data at write time like TileLayerMetadata.fromRDD,
+  GeotiffTilingExample.scala:50).
+- ``{base}/_attributes/<layer>/<zoom>/attr/<name>.json`` — one JSON
+  attribute (Utils.writeHistogram / readHistogram analog,
+  Utils.scala:78-89), the layout of the reference's
+  HadoopAttributeStore: one small file per key.
 
-Scale: writes never collect tiles; metadata inference is one small agg
-job; deletes drop whole partition directories.
+Attribute files are written to a temp name and renamed over the target
+(``FileContext.rename`` with OVERWRITE), so writers of different keys
+never touch a shared file and readers never see a half-written one;
+reads glob the directory listing in-process and skip temp names. Metadata and
+attribute reads and writes run no Spark job.
+
+Scale: writes never collect tiles; the metadata and the histogram are
+two aggregates over the written files; deletes drop whole directories.
 """
 
 from __future__ import annotations
 
 import json
-import threading
+import uuid
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from biggis_landuse_spark.model import ATTRIBUTE_SCHEMA, LAYER_META_SCHEMA
+from biggis_landuse_spark.model import (
+    ATTRIBUTE_SCHEMA,
+    LAYER_META_SCHEMA,
+    TILE_SCHEMA,
+)
+from biggis_landuse_spark.session import local_df
 
-# serializes the read-modify-write metadata/attribute upserts so
-# concurrent per-layer ingest jobs (operators.reproject.
-# ingest_layers_webmercator) can share one catalog safely
-_META_LOCK = threading.RLock()
+# tile columns stored in the parquet files; layer and zoom live in the
+# partition directory names
+_DATA_SCHEMA = T.StructType(
+    [f for f in TILE_SCHEMA.fields if f.name not in ("layer", "zoom")]
+)
+_TMP_SUFFIX = ".tmp"
+HISTOGRAM_BUCKETS = 16
 
 Z_BITS = 16
 
@@ -122,8 +142,7 @@ class LayerCatalog:
         self.spark = spark
         self.base = base.rstrip("/")
         self.tiles_path = f"{self.base}/tiles"
-        self.layers_path = f"{self.base}/layers"
-        self.attributes_path = f"{self.base}/attributes"
+        self.attributes_path = f"{self.base}/_attributes"
 
     # -- write -------------------------------------------------------------
 
@@ -137,8 +156,8 @@ class LayerCatalog:
         index_method: str = "zorder",
     ) -> None:
         """Write a tile DataFrame as (layer, zoom), globally SFC-ordered
-        across ``target_files`` files, and upsert the inferred
-        metadata row.
+        across ``target_files`` files, and store the inferred metadata
+        and the histogram attribute.
 
         ``index_method``: "zorder" (default, Morton interleave) or
         "hilbert" (locality-equivalent Hilbert keying — the same
@@ -161,15 +180,26 @@ class LayerCatalog:
         min/max stats on the key stay non-overlapping, which is what
         makes spatial-range reads prune files like the reference's
         Z-curve index ranges (api/package.scala:143).
+
+        The input is conformed to the stored tile columns (int keys, a
+        timestamp ``ts`` — NULL for spatial layers — and ``tile``), so
+        the files always match the schema ``read_layer`` pins.
         """
-        keyed = tiles.withColumn("layer", F.lit(layer)).withColumn(
-            "zoom", F.lit(zoom)
-        )
         # space-time layers (SpaceTimeKey analog, api/package.scala:
         # 152-164 HilbertKeyIndexMethod(1)): time-major, Z-curve within
         # each instant, so Parquet row-group min/max stats prune BOTH a
         # time-range filter and a spatial-range filter. Spatial-only
-        # layers (ts all NULL) keep the pure Z-order.
+        # layers (no ts column) keep the pure Z-order.
+        sort_keys = ["ts", "_zk"] if "ts" in tiles.columns else ["_zk"]
+        ts = F.col("ts") if "ts" in tiles.columns else F.lit(None)
+        keyed = tiles.select(
+            F.lit(layer).alias("layer"),
+            F.lit(zoom).alias("zoom"),
+            F.col("tile_col").cast("int").alias("tile_col"),
+            F.col("tile_row").cast("int").alias("tile_row"),
+            ts.cast("timestamp").alias("ts"),
+            "tile",
+        )
         if index_method == "hilbert":
             keyed = with_hilbert_key(keyed, out="_zk")
         elif index_method == "zorder":
@@ -179,7 +209,6 @@ class LayerCatalog:
                 f"index_method must be 'zorder' or 'hilbert', got "
                 f"{index_method!r}"
             )
-        sort_keys = ["ts", "_zk"] if "ts" in keyed.columns else ["_zk"]
         n_files = (
             target_files
             if target_files is not None
@@ -210,157 +239,85 @@ class LayerCatalog:
             keyed.unpersist()
         # metadata + histogram read BACK from the written parquet
         # (r8, found by the scene-scale e2e): computing them from the
-        # input relation re-executed the whole upstream pipeline —
-        # with the lazy ingest chain (decode → warp → reassembly)
-        # that made one write_layer cost ~4 full passes (range-
-        # partitioner sampling + write + metadata + histogram). The
-        # written layer is byte-identical input for both, and the
-        # post-write scans are cheap columnar reads.
-        written = self.read_layer(layer, zoom).withColumn(
-            "layer", F.lit(layer)
-        ).withColumn("zoom", F.lit(zoom))
-        meta = self._infer_metadata(written, layer, zoom, crs)
-        self._upsert_layer_row(meta)
+        # input relation re-executed the whole upstream pipeline. Two
+        # global aggregates: the first yields key bounds, tile shape,
+        # band count and value bounds; the second bins every value
+        # against those bounds.
+        written = self.read_layer(layer, zoom)
+        t = F.col("tile")
+        values = F.flatten(t["bands"])
+        meta = written.agg(
+            F.first(t["cell_type"]).alias("cell_type"),
+            F.max(F.size(t["bands"])).alias("n_bands"),
+            F.first(t["cols"]).alias("tile_cols"),
+            F.first(t["rows"]).alias("tile_rows"),
+            (F.max("tile_col") - F.min("tile_col") + 1).alias("layout_cols"),
+            (F.max("tile_row") - F.min("tile_row") + 1).alias("layout_rows"),
+            F.min("tile_col").alias("key_col_min"),
+            F.max("tile_col").alias("key_col_max"),
+            F.min("tile_row").alias("key_row_min"),
+            F.max("tile_row").alias("key_row_max"),
+            F.min(F.array_min(values)).alias("lo"),
+            F.max(F.array_max(values)).alias("hi"),
+        ).first().asDict()
+        lo, hi = meta.pop("lo"), meta.pop("hi")
+        self._put_json(
+            self._metadata_path(layer, zoom),
+            {"layer": layer, "zoom": zoom, "crs": crs, "extent": None, **meta},
+        )
         self.write_attribute(
-            layer, zoom, "histogramData", self._histogram_json(written)
+            layer, zoom, "histogramData", self._histogram_json(written, lo, hi)
         )
 
-    def _infer_metadata(
-        self, tiles: DataFrame, layer: str, zoom: int, crs: str
-    ) -> dict:
-        t = F.col("tile")
-        row = (
-            tiles.agg(
-                F.min("tile_col").alias("key_col_min"),
-                F.max("tile_col").alias("key_col_max"),
-                F.min("tile_row").alias("key_row_min"),
-                F.max("tile_row").alias("key_row_max"),
-                F.first(t["cols"]).alias("tile_cols"),
-                F.first(t["rows"]).alias("tile_rows"),
-                F.first(t["cell_type"]).alias("cell_type"),
-                F.max(F.size(t["bands"])).alias("n_bands"),
-            )
-        ).first()
-        return {
-            "layer": layer,
-            "zoom": zoom,
-            "cell_type": row["cell_type"],
-            "crs": crs,
-            "n_bands": row["n_bands"],
-            "tile_cols": row["tile_cols"],
-            "tile_rows": row["tile_rows"],
-            "layout_cols": row["key_col_max"] - row["key_col_min"] + 1,
-            "layout_rows": row["key_row_max"] - row["key_row_min"] + 1,
-            "key_col_min": row["key_col_min"],
-            "key_col_max": row["key_col_max"],
-            "key_row_min": row["key_row_min"],
-            "key_row_max": row["key_row_max"],
-            "extent": None,
-        }
-
-    def _histogram_json(self, tiles: DataFrame, n_buckets: int = 16) -> str:
+    @staticmethod
+    def _histogram_json(tiles: DataFrame, lo, hi) -> str:
         """Layer histogram attribute (reference: rdd.histogram written
-        at zoom 0, api/package.scala:146).
-
-        Bounds and counts come from the SAME all-band pixel relation,
-        so multiband layers get true lo/hi (not band-0-only clamps).
-        """
-        t = F.col("tile")
-        values = (
-            tiles.select(F.explode(t["bands"]).alias("b"))
-            .select(F.explode("b").alias("v"))
-            .where(F.col("v").isNotNull())
-        )
-        bounds = values.agg(
-            F.min("v").alias("lo"), F.max("v").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
+        at zoom 0, api/package.scala:146) over every non-NULL value of
+        every band, binned against the layer's true lo/hi (not
+        band-0-only clamps). One aggregate, one ``count_if`` per
+        bucket; only non-empty buckets are listed."""
         if lo is None or hi is None or hi == lo:
             return json.dumps({"lo": lo, "hi": hi, "counts": []})
-        step = (hi - lo) / n_buckets
-        counts = (
-            values
-            .groupBy(
-                F.least(
-                    F.greatest(
-                        F.floor((F.col("v") - F.lit(lo)) / F.lit(step)), F.lit(0)
-                    ),
-                    F.lit(n_buckets - 1),
-                ).alias("bucket")
-            )
-            .count()
-            .orderBy("bucket")
-            .collect()
+        n = HISTOGRAM_BUCKETS
+        step = (hi - lo) / n
+        v = F.col("v")
+        bucket = F.least(
+            F.greatest(F.floor((v - F.lit(lo)) / F.lit(step)), F.lit(0)),
+            F.lit(n - 1),
+        )
+        row = (
+            tiles.select(F.explode(F.flatten(F.col("tile")["bands"])).alias("v"))
+            .where(v.isNotNull())
+            .select(bucket.alias("bucket"))
+            .agg(*[F.count_if(F.col("bucket") == k) for k in range(n)])
+            .first()
         )
         return json.dumps(
             {
                 "lo": lo,
                 "hi": hi,
-                "counts": [[int(r["bucket"]), int(r["count"])] for r in counts],
+                "counts": [[k, int(c)] for k, c in enumerate(row) if c],
             }
         )
-
-    def _upsert_layer_row(self, meta: dict) -> None:
-        # the metadata upsert is a read-modify-write of a tiny table:
-        # the ONE part of write_layer that is not safe under
-        # concurrent per-layer ingest jobs (the data writes commit
-        # disjoint (layer, zoom) partitions through per-job dynamic-
-        # overwrite staging dirs). Serialize it process-wide.
-        with _META_LOCK:
-            new_row = self._local_df([meta], LAYER_META_SCHEMA)
-            existing = self.layers()
-            merged = existing.where(
-                ~((F.col("layer") == meta["layer"])
-                  & (F.col("zoom") == meta["zoom"]))
-            ).unionByName(new_row)
-            self._rewrite_small_table(
-                merged, self.layers_path, LAYER_META_SCHEMA
-            )
-
-    def _rewrite_small_table(self, df: DataFrame, path: str, schema) -> None:
-        rows = df.collect()  # metadata tables are tiny by construction
-        out = self._local_df(rows, schema)
-        out.coalesce(1).write.mode("overwrite").parquet(path)
-
-    def _local_df(self, rows: list, schema) -> DataFrame:
-        """Tiny driver-local rows → DataFrame via the Arrow/pandas
-        path (session.local_df). A plain ``createDataFrame(list)``
-        plans a PYTHON RDD scan, so every metadata write paid ~4.5 s
-        of Python-worker spin-up for a one-row table (r10, found
-        profiling scene ingest: upsert + attribute write cost more
-        than the layer write itself); the pandas route converts
-        through Arrow into a JVM-local relation — 0.15 s."""
-        from biggis_landuse_spark.session import local_df
-
-        return local_df(self.spark, rows, schema)
 
     # -- read --------------------------------------------------------------
 
     def layers(self) -> DataFrame:
-        if not self._exists(self.layers_path):
-            return self.spark.createDataFrame([], schema=LAYER_META_SCHEMA)
-        return self.spark.read.parquet(self.layers_path)
+        """Metadata rows of every (layer, zoom), as a local relation."""
+        return local_df(self.spark, self._metadata_rows(), LAYER_META_SCHEMA)
 
     def layer_ids(self) -> list[tuple[str, int]]:
         """All (layer, zoom) pairs (reference: attributeStore.layerIds,
         api/package.scala:108-122)."""
-        return [
-            (r["layer"], r["zoom"])
-            for r in self.layers().select("layer", "zoom").collect()
-        ]
+        return [(m["layer"], m["zoom"]) for m in self._metadata_rows()]
 
     def finest_zoom(self, layer: str) -> int:
         """Reference: zoomsOfLayer ... maxBy(_.zoom)
         (NDVILayerExample.scala:95-103)."""
-        row = (
-            self.layers()
-            .where(F.col("layer") == layer)
-            .agg(F.max("zoom").alias("z"))
-            .first()
-        )
-        if row is None or row["z"] is None:
+        zooms = [m["zoom"] for m in self._metadata_rows(layer)]
+        if not zooms:
             raise KeyError(f"layer not found: {layer}")
-        return row["z"]
+        return max(zooms)
 
     def layer_crs(self, layer: str, zoom: int | None = None) -> str:
         """Grid CRS recorded for (layer, zoom) — zoom=None means any
@@ -368,13 +325,13 @@ class LayerCatalog:
         stacking alignment check reads this (reference:
         tilesmerged.metadata.crs != tiles.metadata.crs,
         ManyLayersToMultibandLayer.scala:244)."""
-        sel = self.layers().where(F.col("layer") == layer)
-        if zoom is not None:
-            sel = sel.where(F.col("zoom") == zoom)
-        row = sel.select("crs").first()
-        if row is None:
+        if zoom is None:
+            rows = self._metadata_rows(layer)
+        else:
+            rows = [self._get_json(self._metadata_path(layer, zoom))]
+        if not rows or rows[0] is None:
             raise KeyError(f"layer not found: {layer}")
-        return row["crs"]
+        return rows[0]["crs"]
 
     def read_layer(
         self,
@@ -389,10 +346,11 @@ class LayerCatalog:
         ``time_range=(start, end)`` half-open filter — pushed to the
         parquet scan, where the time-major write order makes it a
         row-group-pruning range predicate (the Hilbert-index read path,
-        api/package.scala:225-245)."""
+        api/package.scala:225-245). The scan uses the pinned
+        ``TILE_SCHEMA``, so building the DataFrame runs no job."""
         if zoom is None:
             zoom = self.finest_zoom(layer)
-        df = self.spark.read.parquet(self.tiles_path).where(
+        df = self.spark.read.schema(TILE_SCHEMA).parquet(self.tiles_path).where(
             (F.col("layer") == layer) & (F.col("zoom") == zoom)
         )
         if time_range is not None:
@@ -411,28 +369,15 @@ class LayerCatalog:
     def delete_layer(self, layer: str, zoom: int | None = None) -> None:
         """Drop one zoom or all zooms of a layer, including metadata and
         attributes (S5; reference: deleteLayerFromCatalog /
-        deleteZoomLevelFromLayer, api/package.scala:67-102)."""
-        zooms = (
-            [zoom]
-            if zoom is not None
-            else [z for (l, z) in self.layer_ids() if l == layer]
-        )
-        for z in zooms:
-            self._delete_dir(f"{self.tiles_path}/layer={layer}/zoom={z}")
+        deleteZoomLevelFromLayer, api/package.scala:67-102). The
+        metadata goes first, so an interrupted delete never leaves a
+        listed layer without tiles."""
         if zoom is None:
-            # leftover dirs, like the reference
+            self._delete_dir(self._key_dir(layer))
             self._delete_dir(f"{self.tiles_path}/layer={layer}")
-        keep = ~(
-            (F.col("layer") == layer)
-            & (F.col("zoom").isin(zooms) if zoom is not None else F.lit(True))
-        )
-        self._rewrite_small_table(
-            self.layers().where(keep), self.layers_path, LAYER_META_SCHEMA
-        )
-        if self._exists(self.attributes_path):
-            self._rewrite_small_table(
-                self.attributes().where(keep), self.attributes_path, ATTRIBUTE_SCHEMA
-            )
+        else:
+            self._delete_dir(self._key_dir(layer, zoom))
+            self._delete_dir(f"{self.tiles_path}/layer={layer}/zoom={zoom}")
 
     # -- merge (layer update) ----------------------------------------------
 
@@ -440,7 +385,8 @@ class LayerCatalog:
         """Merge an update into an existing layer: full-outer join on the
         tile key, cell-level coalesce(existing, update) — Delta MERGE
         semantics built from join + overwrite (reference:
-        mergeRddIntoLayer, api/package.scala:328-385)."""
+        mergeRddIntoLayer, api/package.scala:328-385). The layer keeps
+        its recorded CRS."""
         from biggis_landuse_spark.operators.local import tile_merge
 
         existing = self.read_layer(layer, zoom).select(
@@ -460,13 +406,11 @@ class LayerCatalog:
             .otherwise(F.coalesce("t_old", "t_new"))
             .alias("tile"),
         )
-        # stage to a temp dir (never read+overwrite the same partition),
-        # then rewrite the layer from the staged result — scales to any
-        # layer size, no driver collect
-        tmp = f"{self.base}/_staging/{layer}/{zoom}"
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
-        self.write_layer(staged, layer, zoom)
+        # stage (never read+overwrite the same partition), then rewrite
+        # the layer from the staged result — scales to any layer size,
+        # never collects tiles
+        staged = self._stage(merged, f"{layer}/{zoom}")
+        self.write_layer(staged, layer, zoom, crs=self.layer_crs(layer, zoom))
         self._delete_dir(f"{self.base}/_staging")
 
     def compact_layer(
@@ -483,16 +427,10 @@ class LayerCatalog:
         sorted key ranges per file). Same staging discipline as merge:
         never read and overwrite a partition in one job.
         """
-        meta = (
-            self.layers()
-            .where((F.col("layer") == layer) & (F.col("zoom") == zoom))
-            .select("crs")
-            .first()
+        meta = self._get_json(self._metadata_path(layer, zoom))
+        staged = self._stage(
+            self.read_layer(layer, zoom), f"compact/{layer}/{zoom}"
         )
-        current = self.read_layer(layer, zoom)
-        tmp = f"{self.base}/_staging/compact/{layer}/{zoom}"
-        current.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
         self.write_layer(
             staged,
             layer,
@@ -502,43 +440,100 @@ class LayerCatalog:
         )
         self._delete_dir(f"{self.base}/_staging")
 
+    def _stage(self, tiles: DataFrame, name: str) -> DataFrame:
+        """Materialize ``tiles`` under ``{base}/_staging/<name>`` and
+        read it back with the pinned tile columns."""
+        tmp = f"{self.base}/_staging/{name}"
+        tiles.select(*_DATA_SCHEMA.fieldNames()).write.mode("overwrite").parquet(tmp)
+        return self.spark.read.schema(_DATA_SCHEMA).parquet(tmp)
+
     # -- attributes (S19) ---------------------------------------------------
 
     def write_attribute(self, layer: str, zoom: int, name: str, payload: str) -> None:
-        with _META_LOCK:
-            new_row = self._local_df(
-                [{"layer": layer, "zoom": zoom, "name": name,
-                  "json": payload}],
-                ATTRIBUTE_SCHEMA,
-            )
-            merged = self.attributes().where(
-                ~(
-                    (F.col("layer") == layer)
-                    & (F.col("zoom") == zoom)
-                    & (F.col("name") == name)
-                )
-            ).unionByName(new_row)
-            self._rewrite_small_table(
-                merged, self.attributes_path, ATTRIBUTE_SCHEMA
-            )
+        self._put_json(
+            self._attribute_path(layer, zoom, name),
+            {"layer": layer, "zoom": zoom, "name": name, "json": payload},
+        )
 
     def attributes(self) -> DataFrame:
-        if not self._exists(self.attributes_path):
-            return self.spark.createDataFrame([], schema=ATTRIBUTE_SCHEMA)
-        return self.spark.read.parquet(self.attributes_path)
+        """Every attribute row, as a local relation."""
+        rows = self._glob_json(f"{self.attributes_path}/*/*/attr/*.json")
+        return local_df(self.spark, rows, ATTRIBUTE_SCHEMA)
 
     def read_attribute(self, layer: str, zoom: int, name: str) -> str | None:
-        rows = (
-            self.attributes()
-            .where(
-                (F.col("layer") == layer)
-                & (F.col("zoom") == zoom)
-                & (F.col("name") == name)
-            )
-            .select("json")
-            .collect()
+        row = self._get_json(self._attribute_path(layer, zoom, name))
+        return row["json"] if row else None
+
+    # -- attribute store ----------------------------------------------------
+
+    def _key_dir(self, layer: str, zoom: int | None = None) -> str:
+        d = f"{self.attributes_path}/{quote(layer, safe='')}"
+        return d if zoom is None else f"{d}/{zoom}"
+
+    def _metadata_path(self, layer: str, zoom: int) -> str:
+        return f"{self._key_dir(layer, zoom)}/metadata.json"
+
+    def _attribute_path(self, layer: str, zoom: int, name: str) -> str:
+        return f"{self._key_dir(layer, zoom)}/attr/{quote(name, safe='')}.json"
+
+    def _metadata_rows(self, layer: str | None = None) -> list[dict]:
+        """Metadata rows sorted by (layer, zoom); one layer's if given."""
+        layer_dir = "*" if layer is None else quote(layer, safe="")
+        rows = self._glob_json(
+            f"{self.attributes_path}/{layer_dir}/*/metadata.json"
         )
-        return rows[0]["json"] if rows else None
+        return sorted(rows, key=lambda m: (m["layer"], m["zoom"]))
+
+    def _put_json(self, path: str, row: dict) -> None:
+        """Write ``row`` to a temp name beside ``path``, then rename it
+        over ``path`` — atomic on HDFS, so a reader sees the old file or
+        the new one, never a partial write."""
+        jvm = self.spark._jvm
+        fs, target = self._hadoop_path(path)
+        tmp = jvm.org.apache.hadoop.fs.Path(
+            f"{path}.{uuid.uuid4().hex}{_TMP_SUFFIX}"
+        )
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(json.dumps(row).encode("utf-8")))
+        finally:
+            out.close()
+        rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+        opts = self.spark.sparkContext._gateway.new_array(rename, 1)
+        opts[0] = rename.OVERWRITE
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            target.toUri(), self.spark._jsc.hadoopConfiguration()
+        ).rename(tmp, target, opts)
+
+    def _get_json(self, path: str) -> dict | None:
+        fs, p = self._hadoop_path(path)
+        return self._read_json(fs, p)
+
+    def _glob_json(self, pattern: str) -> list[dict]:
+        """Rows of every file matching ``pattern`` (temp names end in
+        ``.tmp``, so a ``*.json`` pattern never lists them)."""
+        fs, p = self._hadoop_path(pattern)
+        rows = (self._read_json(fs, s.getPath()) for s in fs.globStatus(p) or [])
+        return [r for r in rows if r is not None]
+
+    def _read_json(self, fs, p) -> dict | None:
+        """One attribute file; None when it is absent (never written, or
+        deleted between a listing and this read)."""
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            stream = fs.open(p)
+        except Py4JJavaError as e:
+            if "FileNotFoundException" in str(e.java_exception):
+                return None
+            raise
+        try:
+            text = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"
+            )
+        finally:
+            stream.close()
+        return json.loads(text)
 
     # -- util ---------------------------------------------------------------
 
@@ -550,10 +545,6 @@ class LayerCatalog:
         p = jvm.org.apache.hadoop.fs.Path(path)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, p
-
-    def _exists(self, path: str) -> bool:
-        fs, p = self._hadoop_path(path)
-        return bool(fs.exists(p))
 
     def _delete_dir(self, path: str) -> None:
         fs, p = self._hadoop_path(path)

@@ -13,8 +13,9 @@ api/package.scala:35-38, GeotiffTilingExample.scala:50). Here:
 - a **pixel table**: the exploded relational face
   (layer, zoom, tile_col, tile_row, band, px, py, value) — the
   reference's "pixeling" (UtilsML.scala:17-52) as a first-class dual;
-- a **layers table** (metadata catalog row per (layer, zoom)) instead of
-  metadata piggybacked on the distributed collection.
+- a **layer metadata row** per (layer, zoom), kept by the catalog as one
+  JSON file, instead of metadata piggybacked on the distributed
+  collection.
 
 Scale note: a 256×256 double band is ~512 KiB; tiles are the unit of
 locality, keys are plain int columns, so joins/aggregations shuffle

@@ -230,10 +230,9 @@ def update_pyramid(
             .join(F.broadcast(parents), ["tile_col", "tile_row"], "left_anti")
             .select("tile_col", "tile_row", "ts", "tile")
         )
-        merged = kept.unionByName(new_parents)
-        tmp = f"{catalog.base}/_staging/pyramid/{layer}/{z - 1}"
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = catalog.spark.read.parquet(tmp)
+        staged = catalog._stage(
+            kept.unionByName(new_parents), f"pyramid/{layer}/{z - 1}"
+        )
         catalog.write_layer(staged, layer, z - 1, crs=crs)
         catalog._delete_dir(f"{catalog.base}/_staging")
         keys = parents

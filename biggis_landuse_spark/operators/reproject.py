@@ -2749,10 +2749,9 @@ def ingest_layers_webmercator(
     independent shuffles one after another, leaving most cores idle
     during each band's tail stages. Spark's scheduler interleaves
     concurrently-submitted jobs natively; each write_layer commits an
-    independent (layer, zoom) partition, so there is no shared state
-    beyond the thread-safe catalog metadata upserts, which are
-    serialized with a lock here. Raises the first failure after all
-    threads settle."""
+    independent (layer, zoom) partition and its own metadata and
+    attribute files, so the threads share no state and take no lock.
+    Raises the first failure after all threads settle."""
     from concurrent.futures import ThreadPoolExecutor
 
     def one(item: tuple[str, str]) -> None:
@@ -2763,9 +2762,8 @@ def ingest_layers_webmercator(
         )
         # dynamic-partition-overwrite stages each job in its own
         # .spark-staging-<jobId> dir and commits only its (layer,
-        # zoom) partition, so the DATA writes are concurrency-safe;
-        # the catalog's metadata upserts serialize internally
-        # (catalog._META_LOCK)
+        # zoom) partition; the metadata and histogram are per-key
+        # files renamed into place, so concurrent writes never meet
         catalog.write_layer(tiles.drop("layer", "zoom"), layer, zoom)
 
     with ThreadPoolExecutor(max_workers=max_parallel) as ex:
