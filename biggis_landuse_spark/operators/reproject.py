@@ -12,21 +12,23 @@ arithmetic, so the warp is a column expression over pixel rows
     mx = R * radians(lon)
     my = R * ln(tan(pi/4 + radians(lat)/2))
 
-Supported source CRSs: EPSG:4326 (affine already in lon/lat degrees),
-the UTM zones EPSG:326xx / 327xx (the common Landsat case — affine in
-easting/northing meters), 2SP Lambert conformal conic national grids
-(EPSG:3034 LCC Europe, EPSG:2154 Lambert-93), Lambert azimuthal
-equal-area (EPSG:3035, the EU INSPIRE grid), polar stereographic
-(EPSG:3413 Arctic, EPSG:3031 Antarctic — the polar earth-observation
-grids), and Albers equal-area conic (EPSG:5070, the US NLCD grid).
-UTM → lon/lat uses the public inverse Transverse Mercator series
-(Snyder 1987, "Map Projections — A Working Manual", eqs. 8-17..8-25
-on WGS84); LCC → lon/lat uses Snyder eqs. 15-1..15-11 and polar
-stereographic Snyder eqs. 21-15..21-20, both with the closed-form
-conformal-latitude series (eq. 3-5); LAEA uses Snyder eqs.
-24-26..24-34 and Albers eqs. 14-8..14-11, both with the closed-form
-authalic-latitude series (eq. 3-18) — all pure column expressions,
-sub-centimeter inside each CRS's validity extent. This closes the
+Supported source CRSs: the 18 kinds of the FAMILIES table — the one
+place a family is added — by EPSG code, proj4 string or WKT: EPSG:4326
+(affine already in lon/lat degrees), the UTM zones EPSG:326xx / 327xx
+(the common Landsat case — affine in easting/northing meters) and any
+Transverse Mercator, Lambert conformal conic, Lambert azimuthal
+equal-area, polar stereographic, Albers, cylindrical equal-area,
+Mercator, equidistant cylindrical, Mollweide, sinusoidal (spherical
+and ellipsoidal), Swiss oblique Mercator, oblique stereographic,
+Hotine oblique Mercator, Krovak and Cassini-Soldner. UTM → lon/lat
+uses the public inverse Transverse Mercator series (Snyder 1987, "Map
+Projections — A Working Manual", eqs. 8-17..8-25 on WGS84); LCC →
+lon/lat uses Snyder eqs. 15-1..15-11 and polar stereographic Snyder
+eqs. 21-15..21-20, both with the closed-form conformal-latitude series
+(eq. 3-5); LAEA uses Snyder eqs. 24-26..24-34 and Albers eqs.
+14-8..14-11, both with the closed-form authalic-latitude series
+(eq. 3-18) — all pure column expressions, sub-centimeter inside each
+CRS's validity extent. This closes the
 CRS-mismatch stacking branch (ManyLayersToMultibandLayer.scala:
 233-260) beyond the UTM family.
 
@@ -51,6 +53,7 @@ plan level.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -73,7 +76,8 @@ def mercator_y(lat: Column) -> Column:
 # -- WGS84 ellipsoid / UTM constants (public) -------------------------------
 
 _A = 6378137.0
-_F = 1 / 298.257223563
+_F_INV = 298.257223563
+_F = 1 / _F_INV
 _E2 = _F * (2 - _F)  # first eccentricity squared
 _EP2 = _E2 / (1 - _E2)  # second eccentricity squared
 _K0 = 0.9996
@@ -208,52 +212,84 @@ def utm_to_lonlat(
     easting: Column, northing: Column, zone: int, north: bool = True
 ) -> tuple[Column, Column]:
     """Inverse Transverse Mercator on WGS84 (Snyder 1987 eqs.
-    8-17..8-25) as pure column expressions → (lon_deg, lat_deg)."""
-    y = northing if north else northing - F.lit(_FALSE_NORTHING_S)
-    m = y / F.lit(_K0)
-    mu = m / F.lit(_A * (1 - _E2 / 4 - 3 * _E2**2 / 64 - 5 * _E2**3 / 256))
-    e1 = _E1
-    phi1 = (
+    8-17..8-25) as pure column expressions → (lon_deg, lat_deg): the
+    generic TM inverse below with the UTM zone's parameters."""
+    return tm_to_lonlat(easting, northing, _utm_params(zone, north))
+
+
+# -- shared latitude series ---------------------------------------------------
+# Every ellipsoidal inverse below closes on an auxiliary latitude whose
+# geodetic latitude is a closed-form series in e² (Snyder 1987): the
+# conformal latitude (eq. 3-5), the authalic latitude (eq. 3-18) or
+# the rectifying latitude (eq. 3-26, the footpoint latitude of a
+# meridional arc). Shared here so each inverse stays a pure column
+# expression with no iteration and no UDF.
+
+
+def _conformal_to_geodetic(chi: Column, e2: float) -> Column:
+    """Conformal latitude → geodetic latitude (radians), Snyder 1987
+    eq. 3-5. Also lets every conformal-sphere double projection (Swiss
+    oblique Mercator, oblique stereographic, Hotine, Krovak) stay a
+    pure column expression: the EPSG Guidance Note 7-2 inverses
+    iterate the isometric→geodetic step, but given the isometric
+    latitude ψ, χ = 2·atan(eᵠ) − π/2 IS the conformal latitude, so the
+    series replaces the iteration exactly."""
+    e4, e6, e8 = e2 * e2, e2 * e2 * e2, e2 * e2 * e2 * e2
+    return (
+        chi
+        + F.lit(e2 / 2 + 5 * e4 / 24 + e6 / 12 + 13 * e8 / 360) * F.sin(2 * chi)
+        + F.lit(7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520) * F.sin(4 * chi)
+        + F.lit(7 * e6 / 120 + 81 * e8 / 1120) * F.sin(6 * chi)
+        + F.lit(4279 * e8 / 161280) * F.sin(8 * chi)
+    )
+
+
+def _authalic_to_geodetic(beta: Column, e2: float) -> Column:
+    """Authalic latitude → geodetic latitude (radians), Snyder 1987
+    eq. 3-18."""
+    e4, e6 = e2 * e2, e2 * e2 * e2
+    return (
+        beta
+        + F.lit(e2 / 3 + 31 * e4 / 180 + 517 * e6 / 5040) * F.sin(2 * beta)
+        + F.lit(23 * e4 / 360 + 251 * e6 / 3780) * F.sin(4 * beta)
+        + F.lit(761 * e6 / 45360) * F.sin(6 * beta)
+    )
+
+
+def _footpoint_latitude(mu: Column, e1: float) -> Column:
+    """Rectifying latitude ``mu`` → geodetic latitude (radians),
+    Snyder 1987 eq. 3-26 (``e1`` as in eq. 3-24)."""
+    return (
         mu
         + F.lit(3 * e1 / 2 - 27 * e1**3 / 32) * F.sin(2 * mu)
         + F.lit(21 * e1**2 / 16 - 55 * e1**4 / 32) * F.sin(4 * mu)
         + F.lit(151 * e1**3 / 96) * F.sin(6 * mu)
         + F.lit(1097 * e1**4 / 512) * F.sin(8 * mu)
     )
-    sin1, cos1, tan1 = F.sin(phi1), F.cos(phi1), F.tan(phi1)
-    c1 = F.lit(_EP2) * cos1 * cos1
-    t1 = tan1 * tan1
-    one_minus = 1 - F.lit(_E2) * sin1 * sin1
-    n1 = F.lit(_A) / F.sqrt(one_minus)
-    r1 = F.lit(_A * (1 - _E2)) / F.pow(one_minus, F.lit(1.5))
-    d = (easting - F.lit(_FALSE_EASTING)) / (n1 * F.lit(_K0))
-    d2, d3 = d * d, d * d * d
-    d4, d5, d6 = d2 * d2, d2 * d3, d3 * d3
-    lat_rad = phi1 - (n1 * tan1 / r1) * (
-        d2 / 2
-        - (5 + 3 * t1 + 10 * c1 - 4 * c1 * c1 - F.lit(9 * _EP2)) * d4 / 24
-        + (
-            61 + 90 * t1 + 298 * c1 + 45 * t1 * t1
-            - F.lit(252 * _EP2) - 3 * c1 * c1
-        ) * d6 / 720
+
+
+def _m(phi: float, e2: float) -> float:
+    """cos φ / sqrt(1 − e²·sin²φ) (Snyder 1987 eq. 14-15)."""
+    return math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) ** 2)
+
+
+def _q(phi: float, e: float, e2: float) -> float:
+    """Snyder 1987 eq. 3-12 (q of the authalic latitude); the exact
+    spherical limit 2·sin φ when e = 0."""
+    s = math.sin(phi)
+    if e == 0.0:
+        return 2.0 * s
+    return (1 - e2) * (
+        s / (1 - e2 * s * s)
+        - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s))
     )
-    lon_rad = (
-        d
-        - (1 + 2 * t1 + c1) * d3 / 6
-        + (
-            5 - 2 * c1 + 28 * t1 - 3 * c1 * c1 + F.lit(8 * _EP2)
-            + 24 * t1 * t1
-        ) * d5 / 120
-    ) / cos1
-    lon = F.degrees(lon_rad) + F.lit(utm_zone_lon0_deg(zone))
-    return lon, F.degrees(lat_rad)
 
 
 # -- Generic Transverse Mercator (any ellipsoid / false origin) -------------
 # The reference ingests ANY CRS through GeoTrellis/proj4j
 # (UtilsShape.scala:54-59; reproject in GeotiffTilingExample.scala:
-# 56-60); the UTM fast path above covers only the UTM parameter shape
-# on WGS84. National TM grids — OSGB EPSG:27700 (Airy 1830, false
+# 56-60); UTM is this family with a zone's parameters on WGS84
+# (_utm_params). National TM grids — OSGB EPSG:27700 (Airy 1830, false
 # origin 400km/-100km, k0=0.9996012717), the DHDN Gauss-Krüger zones
 # EPSG:31466-31469 (Bessel 1841, k0=1, 3°-wide zones), NZTM2000
 # EPSG:2193 — are the same Snyder 1987 eqs. 8-17..8-25 inverse with
@@ -272,6 +308,14 @@ class TmParams:
         self.a, self.f_inv = a, f_inv
         self.lat0, self.lon0, self.k0 = lat0, lon0, k0
         self.fe, self.fn = fe, fn
+
+
+def _utm_params(zone: int, north: bool) -> TmParams:
+    """A UTM zone as Transverse Mercator parameters on WGS84."""
+    return TmParams(
+        _A, _F_INV, 0.0, utm_zone_lon0_deg(zone), _K0, _FALSE_EASTING,
+        0.0 if north else _FALSE_NORTHING_S,
+    )
 
 
 def _merid_arc(a: float, e2: float, lat_deg: float) -> float:
@@ -301,18 +345,16 @@ def tm_to_lonlat(
 ) -> tuple[Column, Column]:
     """Inverse Transverse Mercator on an arbitrary ellipsoid / false
     origin (Snyder 1987 eqs. 8-17..8-25) as pure column expressions →
-    (lon_deg, lat_deg). Same series and association order as
-    utm_to_lonlat with (a, e2, k0, FE, FN, lat0-arc) generalized."""
+    (lon_deg, lat_deg); utm_to_lonlat is this inverse with a UTM
+    zone's parameters."""
     e2, ep2, e1, m_den, m0 = _tm_consts(p)
-    m = F.lit(m0) + (northing - F.lit(p.fn)) / F.lit(p.k0)
+    # no identity terms for a zero false northing / origin arc (UTM
+    # north, Gauss-Krüger): ``m`` is repeated thousands of times in the
+    # materialized tree, so each one grows the plan the warp compiles
+    y = northing - F.lit(p.fn) if p.fn else northing
+    m = y / F.lit(p.k0) if not m0 else F.lit(m0) + y / F.lit(p.k0)
     mu = m / F.lit(m_den)
-    phi1 = (
-        mu
-        + F.lit(3 * e1 / 2 - 27 * e1**3 / 32) * F.sin(2 * mu)
-        + F.lit(21 * e1**2 / 16 - 55 * e1**4 / 32) * F.sin(4 * mu)
-        + F.lit(151 * e1**3 / 96) * F.sin(6 * mu)
-        + F.lit(1097 * e1**4 / 512) * F.sin(8 * mu)
-    )
+    phi1 = _footpoint_latitude(mu, e1)
     sin1, cos1, tan1 = F.sin(phi1), F.cos(phi1), F.tan(phi1)
     c1 = F.lit(ep2) * cos1 * cos1
     t1 = tan1 * tan1
@@ -406,9 +448,6 @@ def _lcc_consts(p: LccParams) -> tuple[float, float, float, float]:
     e2 = f * (2 - f)
     e = math.sqrt(e2)
 
-    def m(phi: float) -> float:
-        return math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) ** 2)
-
     def t(phi: float) -> float:
         es = e * math.sin(phi)
         return math.tan(math.pi / 4 - phi / 2) / ((1 - es) / (1 + es)) ** (
@@ -416,10 +455,9 @@ def _lcc_consts(p: LccParams) -> tuple[float, float, float, float]:
         )
 
     p0, p1, p2 = (math.radians(v) for v in (p.lat0, p.lat1, p.lat2))
-    n = (math.log(m(p1)) - math.log(m(p2))) / (
-        math.log(t(p1)) - math.log(t(p2))
-    )
-    af = p.a * m(p1) / (n * t(p1) ** n)
+    m1, m2 = _m(p1, e2), _m(p2, e2)
+    n = (math.log(m1) - math.log(m2)) / (math.log(t(p1)) - math.log(t(p2)))
+    af = p.a * m1 / (n * t(p1) ** n)
     rho0 = af * t(p0) ** n
     return e, n, af, rho0
 
@@ -432,7 +470,6 @@ def lcc_to_lonlat(
     (closed-form series, no iteration, no UDF)."""
     e, n, af, rho0 = _lcc_consts(p)
     e2 = e * e
-    e4, e6, e8 = e2 * e2, e2 * e2 * e2, e2 * e2 * e2 * e2
     ep = easting - F.lit(p.fe)
     npr = F.lit(rho0) - (northing - F.lit(p.fn))
     rho = F.sqrt(ep * ep + npr * npr)  # n > 0 for northern parallels
@@ -440,13 +477,7 @@ def lcc_to_lonlat(
     theta = F.atan2(ep, npr)
     lon = F.degrees(theta / F.lit(n)) + F.lit(p.lon0)
     chi = F.lit(math.pi / 2) - 2 * F.atan(tp)
-    lat_rad = (
-        chi
-        + F.lit(e2 / 2 + 5 * e4 / 24 + e6 / 12 + 13 * e8 / 360) * F.sin(2 * chi)
-        + F.lit(7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520) * F.sin(4 * chi)
-        + F.lit(7 * e6 / 120 + 81 * e8 / 1120) * F.sin(6 * chi)
-        + F.lit(4279 * e8 / 161280) * F.sin(8 * chi)
-    )
+    lat_rad = _conformal_to_geodetic(chi, e2)
     return lon, F.degrees(lat_rad)
 
 
@@ -482,22 +513,11 @@ def _laea_consts(p: LaeaParams) -> tuple[float, float, float, float, float]:
     f = 1.0 / p.f_inv
     e2 = f * (2 - f)
     e = math.sqrt(e2)
-
-    def q(phi: float) -> float:
-        s = math.sin(phi)
-        if e == 0.0:  # spherical limit of the authalic latitude
-            return 2.0 * s
-        return (1 - e2) * (
-            s / (1 - e2 * s * s)
-            - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s))
-        )
-
-    qp = q(math.pi / 2)
+    qp = _q(math.pi / 2, e, e2)
     phi0 = math.radians(p.lat0)
-    beta0 = math.asin(q(phi0) / qp)
+    beta0 = math.asin(_q(phi0, e, e2) / qp)
     rq = p.a * math.sqrt(qp / 2)
-    m0 = math.cos(phi0) / math.sqrt(1 - e2 * math.sin(phi0) ** 2)
-    d = p.a * m0 / (rq * math.cos(beta0))
+    d = p.a * _m(phi0, e2) / (rq * math.cos(beta0))
     return e, qp, beta0, rq, d
 
 
@@ -509,7 +529,6 @@ def laea_to_lonlat(
     (closed-form authalic series, no iteration, no UDF)."""
     e, qp, beta0, rq, d = _laea_consts(p)
     e2 = e * e
-    e4, e6 = e2 * e2, e2 * e2 * e2
     xp = (easting - F.lit(p.fe)) / F.lit(d)  # spherical-equivalent x
     yp = F.lit(d) * (northing - F.lit(p.fn))  # spherical-equivalent y
     rho = F.sqrt(xp * xp + yp * yp)
@@ -521,12 +540,7 @@ def laea_to_lonlat(
         rho != 0, yp * sinc * F.lit(math.cos(beta0)) / rho
     ).otherwise(F.lit(0.0))
     betap = F.asin(cosc * F.lit(math.sin(beta0)) + frac)
-    lat_rad = (
-        betap
-        + F.lit(e2 / 3 + 31 * e4 / 180 + 517 * e6 / 5040) * F.sin(2 * betap)
-        + F.lit(23 * e4 / 360 + 251 * e6 / 3780) * F.sin(4 * betap)
-        + F.lit(761 * e6 / 45360) * F.sin(6 * betap)
-    )
+    lat_rad = _authalic_to_geodetic(betap, e2)
     lon = F.lit(p.lon0) + F.degrees(
         F.atan2(
             xp * sinc,
@@ -600,7 +614,6 @@ def ps_to_lonlat(
     (closed-form conformal series, no iteration, no UDF)."""
     e, factor = _ps_consts(p)
     e2 = e * e
-    e4, e6, e8 = e2 * e2, e2 * e2 * e2, e2 * e2 * e2 * e2
     ep = easting - F.lit(p.fe)
     npr = northing - F.lit(p.fn)
     rho = F.sqrt(ep * ep + npr * npr)
@@ -611,13 +624,7 @@ def ps_to_lonlat(
     else:
         chi = 2 * F.atan(tp) - F.lit(math.pi / 2)
         lon = F.lit(p.lon0) + F.degrees(F.atan2(ep, npr))
-    lat_rad = (
-        chi
-        + F.lit(e2 / 2 + 5 * e4 / 24 + e6 / 12 + 13 * e8 / 360) * F.sin(2 * chi)
-        + F.lit(7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520) * F.sin(4 * chi)
-        + F.lit(7 * e6 / 120 + 81 * e8 / 1120) * F.sin(6 * chi)
-        + F.lit(4279 * e8 / 161280) * F.sin(8 * chi)
-    )
+    lat_rad = _conformal_to_geodetic(chi, e2)
     return lon, F.degrees(lat_rad)
 
 
@@ -651,25 +658,12 @@ def _aea_consts(p: AeaParams) -> tuple[float, float, float, float, float]:
     f = 1.0 / p.f_inv
     e2 = f * (2 - f)
     e = math.sqrt(e2)
-
-    def q(phi: float) -> float:
-        s = math.sin(phi)
-        if e == 0.0:  # spherical limit of the authalic latitude
-            return 2.0 * s
-        return (1 - e2) * (
-            s / (1 - e2 * s * s)
-            - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s))
-        )
-
-    def m(phi: float) -> float:
-        return math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) ** 2)
-
-    qp = q(math.pi / 2)
+    qp = _q(math.pi / 2, e, e2)
     p0, p1, p2 = (math.radians(v) for v in (p.lat0, p.lat1, p.lat2))
-    m1, m2 = m(p1), m(p2)
-    n = (m1 * m1 - m2 * m2) / (q(p2) - q(p1))
-    c = m1 * m1 + n * q(p1)
-    rho0 = p.a * math.sqrt(c - n * q(p0)) / n
+    m1, m2 = _m(p1, e2), _m(p2, e2)
+    n = (m1 * m1 - m2 * m2) / (_q(p2, e, e2) - _q(p1, e, e2))
+    c = m1 * m1 + n * _q(p1, e, e2)
+    rho0 = p.a * math.sqrt(c - n * _q(p0, e, e2)) / n
     return e, qp, n, c, rho0
 
 
@@ -681,7 +675,6 @@ def aea_to_lonlat(
     (closed-form authalic series, no iteration, no UDF)."""
     e, qp, n, c, rho0 = _aea_consts(p)
     e2 = e * e
-    e4, e6 = e2 * e2, e2 * e2 * e2
     # Snyder: when n is negative (southern standard parallels) the
     # signs of easting offset, rho0-offset and theta all flip
     s = 1.0 if n > 0 else -1.0
@@ -691,12 +684,7 @@ def aea_to_lonlat(
     theta = F.atan2(ep, npr)
     qprime = (F.lit(c) - rho * rho * F.lit(n * n / (p.a * p.a))) / F.lit(n)
     betap = F.asin(qprime / F.lit(qp))
-    lat_rad = (
-        betap
-        + F.lit(e2 / 3 + 31 * e4 / 180 + 517 * e6 / 5040) * F.sin(2 * betap)
-        + F.lit(23 * e4 / 360 + 251 * e6 / 3780) * F.sin(4 * betap)
-        + F.lit(761 * e6 / 45360) * F.sin(6 * betap)
-    )
+    lat_rad = _authalic_to_geodetic(betap, e2)
     lon = F.lit(p.lon0) + F.degrees(theta / F.lit(n))
     return lon, F.degrees(lat_rad)
 
@@ -770,14 +758,7 @@ def _cea_consts(p: CeaParams) -> tuple[float, float, float]:
     f = 1.0 / p.f_inv
     e2 = f * (2 - f)
     e = math.sqrt(e2)
-    if e == 0.0:  # spherical limit of the authalic latitude
-        qp = 2.0
-    else:
-        s = math.sin(math.pi / 2)
-        qp = (1 - e2) * (
-            s / (1 - e2 * s * s)
-            - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s))
-        )
+    qp = _q(math.pi / 2, e, e2)
     phi_ts = math.radians(p.lat_ts)
     k0 = math.cos(phi_ts) / math.sqrt(1 - e2 * math.sin(phi_ts) ** 2)
     return e, qp, k0
@@ -791,16 +772,10 @@ def cea_to_lonlat(
     domain (closed-form authalic series, no iteration, no UDF)."""
     e, qp, k0 = _cea_consts(p)
     e2 = e * e
-    e4, e6 = e2 * e2, e2 * e2 * e2
     beta = F.asin(
         2 * (northing - F.lit(p.fn)) * F.lit(k0) / F.lit(p.a * qp)
     )
-    lat_rad = (
-        beta
-        + F.lit(e2 / 3 + 31 * e4 / 180 + 517 * e6 / 5040) * F.sin(2 * beta)
-        + F.lit(23 * e4 / 360 + 251 * e6 / 3780) * F.sin(4 * beta)
-        + F.lit(761 * e6 / 45360) * F.sin(6 * beta)
-    )
+    lat_rad = _authalic_to_geodetic(beta, e2)
     lon = F.lit(p.lon0) + F.degrees(
         (easting - F.lit(p.fe)) / F.lit(p.a * k0)
     )
@@ -863,16 +838,9 @@ def merc_to_lonlat(
     uses (EPSG GN7-2; no iteration, no UDF)."""
     e, ak = _merc_consts(p)
     e2 = e * e
-    e4, e6, e8 = e2 * e2, e2 * e2 * e2, e2 * e2 * e2 * e2
     t = F.exp((F.lit(p.fn) - northing) / F.lit(ak))
     chi = F.lit(math.pi / 2) - 2 * F.atan(t)
-    lat_rad = (
-        chi
-        + F.lit(e2 / 2 + 5 * e4 / 24 + e6 / 12 + 13 * e8 / 360) * F.sin(2 * chi)
-        + F.lit(7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520) * F.sin(4 * chi)
-        + F.lit(7 * e6 / 120 + 81 * e8 / 1120) * F.sin(6 * chi)
-        + F.lit(4279 * e8 / 161280) * F.sin(8 * chi)
-    )
+    lat_rad = _conformal_to_geodetic(chi, e2)
     lon = F.lit(p.lon0) + F.degrees((easting - F.lit(p.fe)) / F.lit(ak))
     return lon, F.degrees(lat_rad)
 
@@ -927,13 +895,7 @@ def eqc_to_lonlat(
     coefficients as the TM inverse's φ1; sub-millimeter)."""
     nu1cos, e1, m_den, m0 = _eqc_consts(p)
     mu = (F.lit(m0) + (northing - F.lit(p.fn))) / F.lit(m_den)
-    lat_rad = (
-        mu
-        + F.lit(3 * e1 / 2 - 27 * e1**3 / 32) * F.sin(2 * mu)
-        + F.lit(21 * e1**2 / 16 - 55 * e1**4 / 32) * F.sin(4 * mu)
-        + F.lit(151 * e1**3 / 96) * F.sin(6 * mu)
-        + F.lit(1097 * e1**4 / 512) * F.sin(8 * mu)
-    )
+    lat_rad = _footpoint_latitude(mu, e1)
     lon = F.lit(p.lon0) + F.degrees((easting - F.lit(p.fe)) / F.lit(nu1cos))
     return lon, F.degrees(lat_rad)
 
@@ -979,28 +941,6 @@ def moll_to_lonlat(
         )
     )
     return lon, F.degrees(lat_rad)
-
-
-# -- shared conformal-latitude inversion (Snyder 1987 eq. 3-5) ---------------
-
-
-def _conformal_to_geodetic(chi: Column, e2: float) -> Column:
-    """Conformal latitude → geodetic latitude (radians) via the
-    closed-form series (Snyder 1987 eq. 3-5) — the same coefficients
-    the LCC/PS/Mercator inverses inline. Lets every conformal-sphere
-    double projection (Swiss oblique Mercator, oblique stereographic)
-    stay a pure column expression: the EPSG Guidance Note 7-2
-    inverses iterate the isometric→geodetic step, but given the
-    isometric latitude ψ, χ = 2·atan(eᵠ) − π/2 IS the conformal
-    latitude, so the series replaces the iteration exactly."""
-    e4, e6, e8 = e2 * e2, e2 * e2 * e2, e2 * e2 * e2 * e2
-    return (
-        chi
-        + F.lit(e2 / 2 + 5 * e4 / 24 + e6 / 12 + 13 * e8 / 360) * F.sin(2 * chi)
-        + F.lit(7 * e4 / 48 + 29 * e6 / 240 + 811 * e8 / 11520) * F.sin(4 * chi)
-        + F.lit(7 * e6 / 120 + 81 * e8 / 1120) * F.sin(6 * chi)
-        + F.lit(4279 * e8 / 161280) * F.sin(8 * chi)
-    )
 
 
 # -- Swiss oblique Mercator (somerc) -----------------------------------------
@@ -1530,14 +1470,7 @@ def _cassini_consts(
     with the TM / ellipsoidal-sinusoidal inverses)."""
     f = 1.0 / p.f_inv
     e2 = f * (2 - f)
-    phi0 = math.radians(p.lat0)
-    m0 = p.a * (
-        (1 - e2 / 4 - 3 * e2**2 / 64 - 5 * e2**3 / 256) * phi0
-        - (3 * e2 / 8 + 3 * e2**2 / 32 + 45 * e2**3 / 1024)
-        * math.sin(2 * phi0)
-        + (15 * e2**2 / 256 + 45 * e2**3 / 1024) * math.sin(4 * phi0)
-        - (35 * e2**3 / 3072) * math.sin(6 * phi0)
-    )
+    m0 = _merid_arc(p.a, e2, p.lat0)
     m_den = p.a * (1 - e2 / 4 - 3 * e2**2 / 64 - 5 * e2**3 / 256)
     e1 = (1 - math.sqrt(1 - e2)) / (1 + math.sqrt(1 - e2))
     c2 = 3 * e1 / 2 - 27 * e1**3 / 32
@@ -1611,13 +1544,7 @@ def sinu_ell_to_lonlat(
     e1 = (1 - math.sqrt(1 - e2)) / (1 + math.sqrt(1 - e2))
     m_den = p.a * (1 - e2 / 4 - 3 * e2**2 / 64 - 5 * e2**3 / 256)
     mu = (northing - F.lit(p.fn)) / F.lit(m_den)
-    lat_rad = (
-        mu
-        + F.lit(3 * e1 / 2 - 27 * e1**3 / 32) * F.sin(2 * mu)
-        + F.lit(21 * e1**2 / 16 - 55 * e1**4 / 32) * F.sin(4 * mu)
-        + F.lit(151 * e1**3 / 96) * F.sin(6 * mu)
-        + F.lit(1097 * e1**4 / 512) * F.sin(8 * mu)
-    )
+    lat_rad = _footpoint_latitude(mu, e1)
     sin_lat = F.sin(lat_rad)
     lon_rad = F.try_divide(
         (easting - F.lit(p.fe))
@@ -1662,6 +1589,86 @@ class GeogParams:
 _GEOCENTRIC = {"WGS84", "GRS80", "NAD83", "ETRS89", "NZGD2000"}
 
 
+# -- CRS families: the one place to add one ----------------------------------
+# kind → (inverse, EPSG code → params). The inverse maps source (x, y)
+# columns and the kind's params to (lon_deg, lat_deg) columns; parse_crs
+# resolves EPSG codes through the tables and the warp calls the inverse.
+# A new family adds its Params class and inverse above, a row here, and
+# its spellings in _parse_proj4_family / _parse_wkt_family.
+FAMILIES = {
+    "lonlat": (lambda x, y, _: (x, y), {}),
+    "utm": (lambda x, y, zn: utm_to_lonlat(x, y, *zn), {}),
+    "tm": (tm_to_lonlat, _TM_CRS),
+    "lcc": (lcc_to_lonlat, _LCC_CRS),
+    "laea": (laea_to_lonlat, _LAEA_CRS),
+    "ps": (ps_to_lonlat, _PS_CRS),
+    "aea": (aea_to_lonlat, _AEA_CRS),
+    "cea": (cea_to_lonlat, _CEA_CRS),
+    "merc": (merc_to_lonlat, _MERC_CRS),
+    "eqc": (eqc_to_lonlat, _EQC_CRS),
+    "moll": (moll_to_lonlat, {}),  # ESRI:54009: parse_crs's ESRI rule
+    "sinu": (sinu_to_lonlat, {}),
+    "sinu_ell": (sinu_ell_to_lonlat, {}),
+    "somerc": (somerc_to_lonlat, _SOMERC_CRS),
+    "sterea": (sterea_to_lonlat, _STEREA_CRS),
+    "omerc": (omerc_to_lonlat, _OMERC_CRS),
+    "krovak": (krovak_to_lonlat, _KROVAK_CRS),
+    "cassini": (cassini_to_lonlat, _CASSINI_CRS),
+}
+
+_EPSG = {
+    code: (kind, params)
+    for kind, (_, codes) in FAMILIES.items()
+    for code, params in codes.items()
+}
+
+#: a parsed CRS: ``(kind, params)`` — ``kind`` keys FAMILIES; ``params``
+#: is the family's Params object, ``(zone, north)`` for utm, and None
+#: or GeogParams for lonlat
+ParsedCrs = tuple[str, object]
+
+
+def _tm_or_utm(a, rf, lat0, lon0, k0, fe, fn) -> ParsedCrs:
+    """Transverse Mercator parameters → ("utm", (zone, north)) when
+    they are exactly a UTM zone on WGS84 (the dedicated utm
+    descriptor, back-compat with the pinned utm_grid plan), else the
+    generic ("tm", TmParams) on its own ellipsoid."""
+    zone = (lon0 + 183.0) / 6.0
+    if (
+        abs(k0 - 0.9996) <= 1e-12
+        and lat0 == 0.0
+        and fe == 500000.0
+        and fn in (0.0, 10000000.0)
+        and abs(zone - round(zone)) <= 1e-9
+        and 1 <= round(zone) <= 60
+        and (a, rf) == _ELLPS["WGS84"]
+    ):
+        return "utm", (int(round(zone)), fn == 0.0)
+    return "tm", TmParams(a, rf, lat0, lon0, k0, fe, fn)
+
+
+def _datum_tail(kind: str, params, datum, ellipsoid) -> ParsedCrs:
+    """The datum half of parse_proj4 and parse_wkt_crs. ``datum()``
+    resolves the shift (HelmertParams, DATUM_UNKNOWN, or None for a
+    WGS84-equivalent datum) and ``ellipsoid()`` the source (a, 1/f);
+    each runs only where the kind needs it. Mollweide and spherical
+    sinusoidal are datum-less abstractions. A shifted UTM (always on
+    WGS84: _tm_or_utm sends any other ellipsoid to tm) rides the
+    generic TM family so the shift travels with the params; a shifted
+    lon/lat becomes GeogParams on the source ellipsoid."""
+    if kind in ("moll", "sinu"):
+        return kind, params
+    hel = datum()
+    if hel is None:
+        return kind, params
+    if kind == "lonlat":
+        return kind, GeogParams(*ellipsoid(), hel)
+    if kind == "utm":
+        kind, params = "tm", _utm_params(*params)
+    params.helmert = hel
+    return kind, params
+
+
 def _proj4_datum(kv: dict, proj4: str):
     """Resolve the datum shift a proj4 definition implies:
     ``HelmertParams`` (explicit ``+towgs84`` or a ``+datum=`` name in
@@ -1695,18 +1702,15 @@ def _proj4_datum(kv: dict, proj4: str):
     return None  # WGS84/GRS80, explicit numeric, or default
 
 
-def parse_proj4(
-    proj4: str,
-) -> tuple[str, tuple[int, bool] | LccParams | LaeaParams | None]:
+def parse_proj4(proj4: str) -> ParsedCrs:
     """Parse a proj4 definition string into the engine's warp-family
     descriptors — the arbitrary-CRS half of parse_crs (the reference
     accepts any CRS object via GeoTrellis, UtilsShape.scala:54-59;
     a .prj/.json sidecar usually carries exactly this string).
 
-    Supported projections: ``longlat``, ``utm`` (+south), ``tmerc``
-    in the UTM parameter shape, ``lcc`` (2SP), ``laea``, ``stere``
-    (polar aspect, +lat_0=±90), ``aea``, ``sinu`` (spherical — the
-    MODIS grid ships "+proj=sinu +R=6371007.181"). Datums (r8,
+    Supported projections: every FAMILIES kind, spelled as
+    _parse_proj4_family lists them (``utm`` and ``tmerc`` on any
+    ellipsoid; the UTM shape on WGS84 is the utm descriptor). Datums (r8,
     proj4j/+towgs84 parity): WGS84/GRS80 pass through; ``+towgs84``
     or a known ``+datum=`` (OSGB36, potsdam) attaches a
     ``HelmertParams`` shift applied before WebMercator keying; a
@@ -1724,75 +1728,61 @@ def parse_proj4(
         key, _, val = tok[1:].partition("=")
         kv[key] = val if val != "" else None
     kind, params = _parse_proj4_family(kv, proj4)
-    if kind in ("moll", "sinu"):
-        return kind, params  # spherical abstractions: datum-less
-    hel = _proj4_datum(kv, proj4)
-    if hel is None:
-        return kind, params
-    if kind == "utm":
-        # the UTM fast-path descriptor is a bare (zone, north) tuple;
-        # a datum-shifted (or datum-unknown) UTM — e.g. ED50
-        # "+proj=utm +ellps=intl" — must ride the generic TM family
-        # so the shift (or the refusal) travels with the params
-        zone, north = params
-        name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
-        a, rf = _ELLPS.get(name, _ELLPS["WGS84"])
-        params = TmParams(
-            a, rf, 0.0, utm_zone_lon0_deg(zone), 0.9996,
-            500_000.0, 0.0 if north else 10_000_000.0,
-        )
-        kind = "tm"
-    if kind == "lonlat":
-        name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
-        a, rf = _ELLPS.get(name, _ELLPS["WGS84"])
-        return "lonlat", GeogParams(a, rf, hel)
-    params.helmert = hel
-    return kind, params
+    return _datum_tail(
+        kind, params,
+        partial(_proj4_datum, kv, proj4),
+        partial(_proj4_ellipsoid, kv, proj4),
+    )
 
 
-def _parse_proj4_family(
-    kv: dict, proj4: str
-) -> tuple[str, tuple[int, bool] | LccParams | LaeaParams | None]:
+def _proj4_num(kv: dict, proj4: str, key: str, default=None) -> float:
+    v = kv.get(key)
+    if v is None:
+        if default is None:
+            raise ValueError(
+                f"proj4 {kv.get('proj')!r} needs +{key}: {proj4!r}"
+            )
+        return default
+    return float(v)
+
+
+def _proj4_ellipsoid(kv: dict, proj4: str) -> tuple[float, float]:
+    """The (a, 1/f) a proj4 definition names. Explicit numeric
+    definitions take precedence over names; a SPHERE comes back as
+    f_inv = inf (e = 0 downstream — every consts function takes the
+    exact spherical limit). Without this, '+proj=merc +a=6378137
+    +b=6378137' (the canonical EPSG:3857 expansion) would silently
+    parse as ELLIPSOIDAL WGS84 — ~35 km of northing error at 60°, the
+    exact silent wrong-warp the module's contract forbids."""
+    num = partial(_proj4_num, kv, proj4)
+    if "R" in kv:
+        return num("R"), math.inf
+    if "a" in kv and "rf" in kv:
+        return num("a"), num("rf")
+    if "a" in kv and "b" in kv:
+        a, b = num("a"), num("b")
+        if not 0 < b <= a:
+            raise ValueError(f"+b must be in (0, a]: {proj4!r}")
+        return a, math.inf if b == a else a / (a - b)
+    if "a" in kv and "ellps" not in kv and "datum" not in kv:
+        return num("a"), math.inf  # PROJ: a bare +a is a sphere
+    name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
+    if name in _ELLPS:
+        return _ELLPS[name]
+    raise ValueError(
+        f"unsupported ellipsoid {name!r} "
+        f"({'/'.join(sorted(_ELLPS))} or explicit +a/+rf, +a/+b, "
+        f"+R): {proj4!r}"
+    )
+
+
+def _parse_proj4_family(kv: dict, proj4: str) -> ParsedCrs:
     """Projection-family half of parse_proj4 (datum handled above)."""
     proj = kv.get("proj")
     if proj is None:
         raise ValueError(f"proj4 string without +proj: {proj4!r}")
-
-    def num(key: str, default: float | None = None) -> float:
-        v = kv.get(key)
-        if v is None:
-            if default is None:
-                raise ValueError(f"proj4 {proj!r} needs +{key}: {proj4!r}")
-            return default
-        return float(v)
-
-    def ellipsoid() -> tuple[float, float]:
-        # explicit numeric definitions take precedence over names; a
-        # SPHERE comes back as f_inv = inf (e = 0 downstream — every
-        # consts function takes the exact spherical limit). Without
-        # this, '+proj=merc +a=6378137 +b=6378137' (the canonical
-        # EPSG:3857 expansion) would silently parse as ELLIPSOIDAL
-        # WGS84 — ~35 km of northing error at 60°, the exact silent
-        # wrong-warp the module's contract forbids.
-        if "R" in kv:
-            return num("R"), math.inf
-        if "a" in kv and "rf" in kv:
-            return num("a"), num("rf")
-        if "a" in kv and "b" in kv:
-            a, b = num("a"), num("b")
-            if not 0 < b <= a:
-                raise ValueError(f"+b must be in (0, a]: {proj4!r}")
-            return a, math.inf if b == a else a / (a - b)
-        if "a" in kv and "ellps" not in kv and "datum" not in kv:
-            return num("a"), math.inf  # PROJ: a bare +a is a sphere
-        name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
-        if name in _ELLPS:
-            return _ELLPS[name]
-        raise ValueError(
-            f"unsupported ellipsoid {name!r} "
-            f"({'/'.join(sorted(_ELLPS))} or explicit +a/+rf, +a/+b, "
-            f"+R): {proj4!r}"
-        )
+    num = partial(_proj4_num, kv, proj4)
+    ellipsoid = partial(_proj4_ellipsoid, kv, proj4)
 
     if proj == "longlat":
         return "lonlat", None
@@ -1800,27 +1790,15 @@ def _parse_proj4_family(
         zone = int(num("zone"))
         if not 1 <= zone <= 60:
             raise ValueError(f"UTM zone {zone} out of range: {proj4!r}")
-        return "utm", (zone, "south" not in kv)
+        return _tm_or_utm(
+            *ellipsoid(), 0.0, utm_zone_lon0_deg(zone), _K0, _FALSE_EASTING,
+            _FALSE_NORTHING_S if "south" in kv else 0.0,
+        )
     if proj == "tmerc":
-        # UTM parameter shape on WGS84 → the dedicated utm family
-        # (back-compat with the pinned utm_grid plan); anything else —
-        # OSGB, Gauss-Krüger, NZTM, any non-UTM false origin — is the
-        # generic TM family on its own ellipsoid.
-        lon0, k = num("lon_0"), num("k", num("k_0", 1.0))
-        x0, y0, lat0 = num("x_0", 0.0), num("y_0", 0.0), num("lat_0", 0.0)
-        a, rf = ellipsoid()
-        zone = (lon0 + 183.0) / 6.0
-        if (
-            abs(k - 0.9996) <= 1e-12
-            and lat0 == 0.0
-            and x0 == 500000.0
-            and y0 in (0.0, 10000000.0)
-            and abs(zone - round(zone)) <= 1e-9
-            and 1 <= round(zone) <= 60
-            and (a, rf) == _ELLPS["WGS84"]
-        ):
-            return "utm", (int(round(zone)), y0 == 0.0)
-        return "tm", TmParams(a, rf, lat0, lon0, k, x0, y0)
+        return _tm_or_utm(
+            *ellipsoid(), num("lat_0", 0.0), num("lon_0"),
+            num("k", num("k_0", 1.0)), num("x_0", 0.0), num("y_0", 0.0),
+        )
     if proj == "lcc":
         a, rf = ellipsoid()
         return "lcc", LccParams(
@@ -2008,54 +1986,45 @@ def _wkt_datum(wkt: str, a: float, rf: float):
     return DATUM_UNKNOWN
 
 
-def parse_wkt_crs(
-    wkt: str,
-) -> tuple[str, tuple[int, bool] | LccParams | LaeaParams | None]:
+def parse_wkt_crs(wkt: str) -> ParsedCrs:
     """Parse an OGC/ESRI WKT CRS definition (the usual content of a
     shapefile's ``.prj`` sidecar — the reference reads these through
     GeoTools, UtilsShape.scala:54-59) into the engine's warp-family
     descriptors. Same families and honest bounds as parse_proj4:
-    geographic (lon/lat), Transverse_Mercator in the UTM shape,
-    Lambert_Conformal_Conic (2SP), Lambert_Azimuthal_Equal_Area.
-    Datum handling (r8) mirrors parse_proj4: TOWGS84[...] / known
-    DATUM names attach a HelmertParams shift, unknown non-WGS84
+    GEOGCS is lon/lat, and every PROJCS PROJECTION that
+    _parse_wkt_family lists maps to its FAMILIES kind
+    (Transverse_Mercator in the UTM shape on WGS84 is the utm
+    descriptor). Datum handling (r8) is parse_proj4's: TOWGS84[...] /
+    known DATUM names attach a HelmertParams shift, unknown non-WGS84
     spheroids attach DATUM_UNKNOWN (warp refuses).
     """
     import re
 
-    kind, params = _parse_wkt_family(wkt)
-    if kind in ("moll", "sinu"):
-        return kind, params
     sph = re.search(
         r'SPHEROID\s*\[\s*"[^"]*"\s*,\s*([-+0-9.eE]+)\s*,\s*([-+0-9.eE]+)',
         wkt,
         re.IGNORECASE,
     )
-    a, rf = (
+    # ESRI writes inverse flattening 0 for a SPHERE; represent it as
+    # f_inv = inf so every consts function takes the exact spherical
+    # (e = 0) limit instead of dividing by zero
+    ell = (
         (float(sph.group(1)), float(sph.group(2)) or math.inf)
         if sph
-        else _ELLPS["WGS84"]
+        else None
     )
-    hel = _wkt_datum(wkt, a, rf)
-    if hel is None:
-        return kind, params
-    if kind == "utm":
-        zone, north = params
-        params = TmParams(
-            *_ELLPS["WGS84"], 0.0, utm_zone_lon0_deg(zone), 0.9996,
-            500_000.0, 0.0 if north else 10_000_000.0,
-        )
-        kind = "tm"
-    if kind == "lonlat":
-        return "lonlat", GeogParams(a, rf, hel)
-    params.helmert = hel
-    return kind, params
+    kind, params = _parse_wkt_family(wkt, ell)
+    a, rf = ell or _ELLPS["WGS84"]
+    return _datum_tail(
+        kind, params, lambda: _wkt_datum(wkt, a, rf), lambda: (a, rf)
+    )
 
 
 def _parse_wkt_family(
-    wkt: str,
-) -> tuple[str, tuple[int, bool] | LccParams | LaeaParams | None]:
-    """Projection-family half of parse_wkt_crs (datum handled above)."""
+    wkt: str, ell: tuple[float, float] | None
+) -> ParsedCrs:
+    """Projection-family half of parse_wkt_crs (datum handled above);
+    ``ell`` is the SPHEROID's (a, 1/f), None when the WKT has none."""
     import re
 
     head = wkt.lstrip()[:12].upper()
@@ -2074,20 +2043,9 @@ def _parse_wkt_family(
             r'PARAMETER\s*\[\s*"([^"]+)"\s*,\s*([-+0-9.eE]+)\s*\]', wkt
         )
     }
-    sph = re.search(
-        r'SPHEROID\s*\[\s*"[^"]*"\s*,\s*([-+0-9.eE]+)\s*,\s*([-+0-9.eE]+)',
-        wkt,
-        re.IGNORECASE,
-    )
-    if not sph:
+    if ell is None:
         raise ValueError(f"WKT without SPHEROID: {wkt[:60]!r}")
-    a, rf = float(sph.group(1)), float(sph.group(2))
-    if rf == 0.0:
-        # ESRI writes inverse flattening 0 for a SPHERE; represent it
-        # as f_inv = inf so every consts function takes the exact
-        # spherical (e = 0) limit instead of dividing by zero. The
-        # Sinusoidal branch below keeps its own rf == 0 contract.
-        rf = math.inf
+    a, rf = ell
     # projected units must be metres (our false eastings/northings are)
     unit = re.findall(r'UNIT\s*\[\s*"([^"]+)"\s*,\s*([-+0-9.eE]+)', wkt)
     if unit:
@@ -2105,23 +2063,11 @@ def _parse_wkt_family(
         return default
 
     if proj == "transverse_mercator":
-        # UTM shape on WGS84 → dedicated utm family; any other TM
-        # (OSGB .prj sidecars, Gauss-Krüger, NZTM) → generic family
-        k0 = p("scale_factor", 1.0)
-        lat0, lon0 = p("latitude_of_origin", 0.0), p("central_meridian")
-        x0, y0 = p("false_easting", 0.0), p("false_northing", 0.0)
-        zone = (lon0 + 183.0) / 6.0
-        if (
-            abs(k0 - 0.9996) <= 1e-12
-            and lat0 == 0.0
-            and x0 == 500000.0
-            and y0 in (0.0, 10000000.0)
-            and abs(zone - round(zone)) <= 1e-9
-            and 1 <= round(zone) <= 60
-            and (a, rf) == _ELLPS["WGS84"]
-        ):
-            return "utm", (int(round(zone)), y0 == 0.0)
-        return "tm", TmParams(a, rf, lat0, lon0, k0, x0, y0)
+        return _tm_or_utm(
+            a, rf, p("latitude_of_origin", 0.0), p("central_meridian"),
+            p("scale_factor", 1.0),
+            p("false_easting", 0.0), p("false_northing", 0.0),
+        )
     if proj in ("lambert_conformal_conic", "lambert_conformal_conic_2sp"):
         return "lcc", LccParams(
             a, rf,
@@ -2376,17 +2322,13 @@ def _parse_wkt_family(
     )
 
 
-def parse_crs(
-    crs: str,
-) -> tuple[str, tuple[int, bool] | LccParams | LaeaParams | None]:
+def parse_crs(crs: str) -> ParsedCrs:
     """``"EPSG:4326"`` → ("lonlat", None); ``"EPSG:326xx"/"327xx"``
-    → ("utm", (zone, north)); ``"EPSG:3034"/"EPSG:2154"`` → ("lcc",
-    LccParams); ``"EPSG:3035"`` → ("laea", LaeaParams);
-    ``"EPSG:3413"/"EPSG:3031"`` → ("ps", PsParams); ``"EPSG:5070"``
-    → ("aea", AeaParams); a ``+proj=`` string → parse_proj4; a
-    ``PROJCS[``/``GEOGCS[`` string → parse_wkt_crs (.prj sidecar
-    content). Anything else raises — an honest bound, not a silent
-    wrong-projection."""
+    → ("utm", (zone, north)); any EPSG code in a FAMILIES table → its
+    (kind, params); ``"ESRI:54009"`` → ("moll", MollParams); a
+    ``+proj=`` string → parse_proj4; a ``PROJCS[``/``GEOGCS[`` string
+    → parse_wkt_crs (.prj sidecar content). Anything else raises — an
+    honest bound, not a silent wrong-projection."""
     stripped = crs.lstrip()
     if stripped.startswith("+"):
         return parse_proj4(crs)
@@ -2397,32 +2339,8 @@ def parse_crs(
     code = crs.upper().removeprefix("EPSG:")
     if code == "4326":
         return "lonlat", None
-    if code.isdigit() and int(code) in _MERC_CRS:
-        return "merc", _MERC_CRS[int(code)]
-    if code.isdigit() and int(code) in _EQC_CRS:
-        return "eqc", _EQC_CRS[int(code)]
-    if code.isdigit() and int(code) in _TM_CRS:
-        return "tm", _TM_CRS[int(code)]
-    if code.isdigit() and int(code) in _LCC_CRS:
-        return "lcc", _LCC_CRS[int(code)]
-    if code.isdigit() and int(code) in _LAEA_CRS:
-        return "laea", _LAEA_CRS[int(code)]
-    if code.isdigit() and int(code) in _PS_CRS:
-        return "ps", _PS_CRS[int(code)]
-    if code.isdigit() and int(code) in _AEA_CRS:
-        return "aea", _AEA_CRS[int(code)]
-    if code.isdigit() and int(code) in _CEA_CRS:
-        return "cea", _CEA_CRS[int(code)]
-    if code.isdigit() and int(code) in _SOMERC_CRS:
-        return "somerc", _SOMERC_CRS[int(code)]
-    if code.isdigit() and int(code) in _STEREA_CRS:
-        return "sterea", _STEREA_CRS[int(code)]
-    if code.isdigit() and int(code) in _OMERC_CRS:
-        return "omerc", _OMERC_CRS[int(code)]
-    if code.isdigit() and int(code) in _KROVAK_CRS:
-        return "krovak", _KROVAK_CRS[int(code)]
-    if code.isdigit() and int(code) in _CASSINI_CRS:
-        return "cassini", _CASSINI_CRS[int(code)]
+    if code.isdigit() and int(code) in _EPSG:
+        return _EPSG[int(code)]
     if code.isdigit() and len(code) == 5:
         num = int(code)
         if 32601 <= num <= 32660:
@@ -2526,43 +2444,7 @@ def reproject_pixels_to_webmercator(
             "Add +towgs84=dx,dy,dz[,rx,ry,rz,ds] (or a TOWGS84[] WKT "
             "element / a known +datum= name) to the CRS definition."
         )
-    if kind == "lonlat":
-        lon, lat = sx, sy
-    elif kind == "tm":
-        lon, lat = tm_to_lonlat(sx, sy, crs_info)
-    elif kind == "lcc":
-        lon, lat = lcc_to_lonlat(sx, sy, crs_info)
-    elif kind == "laea":
-        lon, lat = laea_to_lonlat(sx, sy, crs_info)
-    elif kind == "ps":
-        lon, lat = ps_to_lonlat(sx, sy, crs_info)
-    elif kind == "aea":
-        lon, lat = aea_to_lonlat(sx, sy, crs_info)
-    elif kind == "cea":
-        lon, lat = cea_to_lonlat(sx, sy, crs_info)
-    elif kind == "merc":
-        lon, lat = merc_to_lonlat(sx, sy, crs_info)
-    elif kind == "eqc":
-        lon, lat = eqc_to_lonlat(sx, sy, crs_info)
-    elif kind == "moll":
-        lon, lat = moll_to_lonlat(sx, sy, crs_info)
-    elif kind == "sinu":
-        lon, lat = sinu_to_lonlat(sx, sy, crs_info)
-    elif kind == "sinu_ell":
-        lon, lat = sinu_ell_to_lonlat(sx, sy, crs_info)
-    elif kind == "somerc":
-        lon, lat = somerc_to_lonlat(sx, sy, crs_info)
-    elif kind == "sterea":
-        lon, lat = sterea_to_lonlat(sx, sy, crs_info)
-    elif kind == "omerc":
-        lon, lat = omerc_to_lonlat(sx, sy, crs_info)
-    elif kind == "krovak":
-        lon, lat = krovak_to_lonlat(sx, sy, crs_info)
-    elif kind == "cassini":
-        lon, lat = cassini_to_lonlat(sx, sy, crs_info)
-    else:
-        zone, north = crs_info
-        lon, lat = utm_to_lonlat(sx, sy, zone, north)
+    lon, lat = FAMILIES[kind][0](sx, sy, crs_info)
     if kind != "lonlat":
         # Plan discipline for the big trig trees (r8, found by the
         # scene-scale e2e): the family-inverse lon/lat expressions
@@ -2675,11 +2557,11 @@ def ingest_geotiff_webmercator(
     scan → decode → reproject to the WebMercator zoomed layout →
     re-tile. The decoder must supply georeferencing columns
     (x0, y0, dx, dy) alongside pixels — see sources.geotiff.
-    ``src_crs`` accepts EPSG:4326, UTM zones (EPSG:326xx/327xx, the
-    Landsat delivery CRS), LCC (EPSG:3034/2154), LAEA (EPSG:3035,
-    the EU INSPIRE grid), or any ``+proj=`` proj4 string within those
-    projection families (parse_proj4 — the .prj-sidecar path,
-    UtilsShape.scala:54-59 parity).
+    ``src_crs`` accepts whatever parse_crs does: EPSG:4326, UTM zones
+    (EPSG:326xx/327xx, the Landsat delivery CRS), the EPSG codes of
+    every FAMILIES table, ESRI:54009, or a ``+proj=`` proj4 / WKT
+    string in any of those projection families (the .prj-sidecar
+    path, UtilsShape.scala:54-59 parity).
 
     ``zoom=None`` infers the level from the first file's resolution
     (zoom_for_resolution), the ZoomedLayoutScheme behavior.

@@ -1057,6 +1057,37 @@ def focal_extrema_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _inverse_grid(
+    spark: SparkSession, sf_dir: str, to_lonlat, params, e, n, per_deg=1
+) -> DataFrame:
+    """The shared body of the inverse-projection ``*_grid`` queries:
+    synthesized source points ``x0 + (p_partkey % mod) * step`` per
+    axis (``e`` and ``n`` are ``(x0, mod, step)``) warped to lat/lon
+    by ``to_lonlat(easting, northing, params)``, re-keyed onto
+    1/per_deg-degree cells and aggregated. STAGED projection, as in
+    utm_grid: lat/lon are materialized once and the grid keys derived
+    from the named columns in a second select, so the trig tree is
+    compiled once; one shuffle for the final aggregate."""
+    (part,) = load_tables(spark, sf_dir, "part")
+
+    def axis(x0, mod, step):
+        return x0 + (F.col("p_partkey") % mod) * step
+
+    def cell(c):
+        v = F.col(c) if per_deg == 1 else F.col(c) * per_deg
+        return F.floor(v).cast("long").alias(f"{c}_cell")
+
+    src = part.select(axis(*e).alias("ee"), axis(*n).alias("nn"))
+    lon, lat = to_lonlat(F.col("ee"), F.col("nn"), params)
+    ll = src.select(lat.alias("lat"), lon.alias("lon"))
+    keyed = ll.select(cell("lat"), cell("lon"), "lat", "lon")
+    return keyed.groupBy("lat_cell", "lon_cell").agg(
+        F.count(F.lit(1)).alias("n_px"),
+        F.round(F.avg("lat"), 4).alias("avg_lat"),
+        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    )
+
+
 def _utm_grid_oracle() -> str:
     """DuckDB replay of utm_to_lonlat with the SAME WGS84 constants
     and multiplication association the engine's column expressions
@@ -1269,23 +1300,9 @@ def tm_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         tm_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (130000.0 + (F.col("p_partkey") % 400) * 1000.0).alias("e"),
-        ((F.col("p_partkey") % 1200) * 1000.0).alias("n"),
-    )
-    lon, lat = tm_to_lonlat(F.col("e"), F.col("n"), _TM_CRS[27700])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, tm_to_lonlat, _TM_CRS[27700],
+        e=(130000.0, 400, 1000.0), n=(0.0, 1200, 1000.0),
     )
 
 
@@ -1581,24 +1598,9 @@ def lcc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         lcc_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (150000.0 + (F.col("p_partkey") % 500) * 2000.0).alias("ee"),
-        (6100000.0 + (F.col("p_partkey") % 451) * 2000.0).alias("nn"),
-    )
-    lon, lat = lcc_to_lonlat(F.col("ee"), F.col("nn"), _LCC_CRS[2154])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, lcc_to_lonlat, _LCC_CRS[2154],
+        e=(150000.0, 500, 2000.0), n=(6100000.0, 451, 2000.0),
     )
 
 
@@ -1687,24 +1689,9 @@ def laea_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         laea_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (2800000.0 + (F.col("p_partkey") % 500) * 4000.0).alias("ee"),
-        (1600000.0 + (F.col("p_partkey") % 451) * 5000.0).alias("nn"),
-    )
-    lon, lat = laea_to_lonlat(F.col("ee"), F.col("nn"), _LAEA_CRS[3035])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, laea_to_lonlat, _LAEA_CRS[3035],
+        e=(2800000.0, 500, 4000.0), n=(1600000.0, 451, 5000.0),
     )
 
 
@@ -1784,24 +1771,9 @@ def ps_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ps_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-2800000.0 + (F.col("p_partkey") % 500) * 11000.0).alias("ee"),
-        (-2800000.0 + (F.col("p_partkey") % 451) * 12000.0).alias("nn"),
-    )
-    lon, lat = ps_to_lonlat(F.col("ee"), F.col("nn"), _PS_CRS[3413])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, ps_to_lonlat, _PS_CRS[3413],
+        e=(-2800000.0, 500, 11000.0), n=(-2800000.0, 451, 12000.0),
     )
 
 
@@ -1880,24 +1852,9 @@ def albers_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         aea_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-2400000.0 + (F.col("p_partkey") % 500) * 9000.0).alias("ee"),
-        (200000.0 + (F.col("p_partkey") % 451) * 6000.0).alias("nn"),
-    )
-    lon, lat = aea_to_lonlat(F.col("ee"), F.col("nn"), _AEA_CRS[5070])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, aea_to_lonlat, _AEA_CRS[5070],
+        e=(-2400000.0, 500, 9000.0), n=(200000.0, 451, 6000.0),
     )
 
 
@@ -3371,23 +3328,9 @@ def sinu_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         sinu_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (1000000.0 + (F.col("p_partkey") % 500) * 8000.0).alias("ee"),
-        (4000000.0 + (F.col("p_partkey") % 451) * 4000.0).alias("nn"),
-    )
-    lon, lat = sinu_to_lonlat(F.col("ee"), F.col("nn"), MODIS_SINU)
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, sinu_to_lonlat, MODIS_SINU,
+        e=(1000000.0, 500, 8000.0), n=(4000000.0, 451, 4000.0),
     )
 
 
@@ -3477,23 +3420,9 @@ def somerc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         somerc_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (2485000.0 + (F.col("p_partkey") % 350) * 1000.0).alias("ee"),
-        (1075000.0 + (F.col("p_partkey") % 220) * 1000.0).alias("nn"),
-    )
-    lon, lat = somerc_to_lonlat(F.col("ee"), F.col("nn"), _SOMERC_CRS[2056])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, somerc_to_lonlat, _SOMERC_CRS[2056],
+        e=(2485000.0, 350, 1000.0), n=(1075000.0, 220, 1000.0),
     )
 
 
@@ -3588,23 +3517,9 @@ def sterea_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         sterea_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (15000.0 + (F.col("p_partkey") % 265) * 1000.0).alias("ee"),
-        (305000.0 + (F.col("p_partkey") % 315) * 1000.0).alias("nn"),
-    )
-    lon, lat = sterea_to_lonlat(F.col("ee"), F.col("nn"), _STEREA_CRS[28992])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat") * 2).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon") * 2).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, sterea_to_lonlat, _STEREA_CRS[28992],
+        e=(15000.0, 265, 1000.0), n=(305000.0, 315, 1000.0), per_deg=2,
     )
 
 
@@ -3678,24 +3593,10 @@ def sinu_ell_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         sinu_ell_to_lonlat,
     )
 
-    p = SinuEllParams(6378137.0, 298.257223563, 0.0, 0.0, 0.0)
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-3600000.0 + (F.col("p_partkey") % 721) * 10000.0).alias("ee"),
-        (-4400000.0 + (F.col("p_partkey") % 881) * 10000.0).alias("nn"),
-    )
-    lon, lat = sinu_ell_to_lonlat(F.col("ee"), F.col("nn"), p)
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, sinu_ell_to_lonlat,
+        SinuEllParams(6378137.0, 298.257223563, 0.0, 0.0, 0.0),
+        e=(-3600000.0, 721, 10000.0), n=(-4400000.0, 881, 10000.0),
     )
 
 
@@ -3803,23 +3704,9 @@ def omerc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         omerc_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (380000.0 + (F.col("p_partkey") % 540) * 1000.0).alias("ee"),
-        (300000.0 + (F.col("p_partkey") % 810) * 1000.0).alias("nn"),
-    )
-    lon, lat = omerc_to_lonlat(F.col("ee"), F.col("nn"), _OMERC_CRS[29873])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat") * 2).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon") * 2).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, omerc_to_lonlat, _OMERC_CRS[29873],
+        e=(380000.0, 540, 1000.0), n=(300000.0, 810, 1000.0), per_deg=2,
     )
 
 
@@ -3927,23 +3814,9 @@ def krovak_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         krovak_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-(435000.0 + (F.col("p_partkey") % 470) * 1000.0)).alias("ee"),
-        (-(940000.0 + (F.col("p_partkey") % 290) * 1000.0)).alias("nn"),
-    )
-    lon, lat = krovak_to_lonlat(F.col("ee"), F.col("nn"), _KROVAK_CRS[5514])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat") * 2).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon") * 2).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, krovak_to_lonlat, _KROVAK_CRS[5514],
+        e=(-435000.0, 470, -1000.0), n=(-940000.0, 290, -1000.0), per_deg=2,
     )
 
 
@@ -4147,24 +4020,9 @@ def cea_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         cea_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-17000000.0 + (F.col("p_partkey") % 500) * 68000.0).alias("ee"),
-        (-7300000.0 + (F.col("p_partkey") % 451) * 32000.0).alias("nn"),
-    )
-    lon, lat = cea_to_lonlat(F.col("ee"), F.col("nn"), _CEA_CRS[6933])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, cea_to_lonlat, _CEA_CRS[6933],
+        e=(-17000000.0, 500, 68000.0), n=(-7300000.0, 451, 32000.0),
     )
 
 
@@ -4239,24 +4097,9 @@ def merc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         merc_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-20000000.0 + (F.col("p_partkey") % 500) * 80000.0).alias("ee"),
-        (-15400000.0 + (F.col("p_partkey") % 441) * 70000.0).alias("nn"),
-    )
-    lon, lat = merc_to_lonlat(F.col("ee"), F.col("nn"), _MERC_CRS[3395])
-    # staged projection — same codegen-size discipline as utm_grid
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, merc_to_lonlat, _MERC_CRS[3395],
+        e=(-20000000.0, 500, 80000.0), n=(-15400000.0, 441, 70000.0),
     )
 
 
@@ -4325,23 +4168,9 @@ def eqc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         eqc_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-20000000.0 + (F.col("p_partkey") % 500) * 80000.0).alias("ee"),
-        (-9900000.0 + (F.col("p_partkey") % 397) * 50000.0).alias("nn"),
-    )
-    lon, lat = eqc_to_lonlat(F.col("ee"), F.col("nn"), _EQC_CRS[4087])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, eqc_to_lonlat, _EQC_CRS[4087],
+        e=(-20000000.0, 500, 80000.0), n=(-9900000.0, 397, 50000.0),
     )
 
 
@@ -4401,23 +4230,9 @@ def moll_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         moll_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (-12800000.0 + (F.col("p_partkey") % 513) * 50000.0).alias("ee"),
-        (-6300000.0 + (F.col("p_partkey") % 421) * 30000.0).alias("nn"),
-    )
-    lon, lat = moll_to_lonlat(F.col("ee"), F.col("nn"), _MOLL_CRS[54009])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat")).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon")).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, moll_to_lonlat, _MOLL_CRS[54009],
+        e=(-12800000.0, 513, 50000.0), n=(-6300000.0, 421, 30000.0),
     )
 
 
@@ -4645,23 +4460,9 @@ def cassini_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         cassini_to_lonlat,
     )
 
-    (part,) = load_tables(spark, sf_dir, "part")
-    src = part.select(
-        (60000.0 + (F.col("p_partkey") % 390) * 500.0).alias("ee"),
-        (10000.0 + (F.col("p_partkey") % 510) * 700.0).alias("nn"),
-    )
-    lon, lat = cassini_to_lonlat(F.col("ee"), F.col("nn"), _CASSINI_CRS[28191])
-    ll = src.select(lat.alias("lat"), lon.alias("lon"))
-    keyed = ll.select(
-        F.floor(F.col("lat") * 2).cast("long").alias("lat_cell"),
-        F.floor(F.col("lon") * 2).cast("long").alias("lon_cell"),
-        "lat",
-        "lon",
-    )
-    return keyed.groupBy("lat_cell", "lon_cell").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.round(F.avg("lat"), 4).alias("avg_lat"),
-        F.round(F.avg("lon"), 4).alias("avg_lon"),
+    return _inverse_grid(
+        spark, sf_dir, cassini_to_lonlat, _CASSINI_CRS[28191],
+        e=(60000.0, 390, 500.0), n=(10000.0, 510, 700.0), per_deg=2,
     )
 
 

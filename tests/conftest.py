@@ -61,7 +61,7 @@ ORACLE_SMOKE = {
     "semantic_dedup", "terrain_tile", "utm_grid", "media_metadata",
     "ndvi_tile", "dsir_select", "simhash_hamming_pairs",
     "hybrid_retrieval", "tfidf_top_terms", "embedding_near_dup",
-    "ann_pq_topk", "flow_accumulation",
+    "ann_pq_topk", "flow_accumulation", "tm_grid", "krovak_grid",
 }
 
 
